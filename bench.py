@@ -353,54 +353,6 @@ def _time_queries(
     return timings
 
 
-def _chunked_timings(names: list[str], chunk: int) -> dict[str, float]:
-    """Run the bench in fresh-JVM chunks: every ``chunk`` queries get
-    their own subprocess (and so their own Spark JVM).
-
-    Built to answer the r9 bench-creep question (driver totals
-    260.4 → 270.8 → 320.8 s over three rounds), then MEASURED OFF by
-    the r10 same-box A/B at sf0.1: the monolithic 290-query batch
-    showed NO aging (279.0 s total, 0.962 s/query; first-60 sum
-    53.2 s vs last-60 55.7 s), while 60-query fresh-JVM chunks cost
-    +14% overall (317.9 s) because each chunk's early queries re-pay
-    JIT warmup (mean 1.57x for the first 10 positions of a chunk vs
-    1.14x after). Hence BENCH_RECYCLE defaults to 0 — this mode is a
-    diagnostic knob for pressure-shedding experiments, not the gate
-    protocol (docs/ROUND10_NOTES.md §4).
-    """
-    import subprocess
-
-    timings: dict[str, float] = {}
-    for lo in range(0, len(names), chunk):
-        sub = names[lo : lo + chunk]
-        env = dict(os.environ)
-        env["BENCH_RECYCLE"] = "0"  # the child runs in-process
-        env["BENCH_ONLY"] = ",".join(sub)
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--child"],
-            env=env,
-            stdout=subprocess.PIPE,
-            text=True,
-        )
-        if proc.returncode != 0:
-            raise RuntimeError(
-                f"bench chunk {lo}:{lo + len(sub)} failed "
-                f"(rc={proc.returncode})"
-            )
-        for line in proc.stdout.splitlines():
-            try:
-                rec = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if "query" in rec and "sec" in rec:
-                timings[rec["query"]] = rec["sec"]
-                print(line, flush=True)  # re-emit for the driver tail
-    missing = [n for n in names if n not in timings]
-    if missing:
-        raise RuntimeError(f"chunks returned no timing for: {missing}")
-    return timings
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -422,15 +374,7 @@ def main() -> None:
             )
         names = wanted
     runs = int(os.environ.get("BENCH_RUNS", "2"))
-    recycle = int(os.environ.get("BENCH_RECYCLE", "0"))
-
-    if "--child" in sys.argv or recycle <= 0 or len(names) <= recycle:
-        timings = _time_queries(names, sf_dir, runs)
-        if "--child" in sys.argv:
-            return  # parent aggregates; per-query lines already out
-    else:
-        # each child re-reads BENCH_RUNS from the inherited env
-        timings = _chunked_timings(names, recycle)
+    timings = _time_queries(names, sf_dir, runs)
 
     total = round(sum(timings.values()), 3)
     print(

@@ -27,8 +27,8 @@ from defimap_data_pipelines_spark.operators.growth import growth_of_10k
 from defimap_data_pipelines_spark.operators.tvl import tvl
 from defimap_data_pipelines_spark.plans.domain import (
     RAW_SERIES_SQL,
-    note_shared_frame,
     orders_raw_series,
+    session_frame,
 )
 from defimap_data_pipelines_spark.sources.parquet import read_table
 
@@ -275,20 +275,15 @@ def trailing_sql(ds: str) -> str:
 TRAILING_SQL = trailing_sql(DS)
 
 
-# (session id, sf_dir) -> cached trailing frame; trailing_return,
-# return_1y, and risk all consume it
-_TRAILING_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# session-shared trailing frame; trailing_return and return_1y both
+# consume it
 def _trailing_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     from defimap_data_pipelines_spark.operators.trailing import trailing_returns
 
-    key = (id(spark), sf_dir)
-    hit = _TRAILING_CACHE.get(key)
-    if hit is None:
-        hit = trailing_returns(orders_raw_series(spark, sf_dir), DS).cache()
-        _TRAILING_CACHE[key] = hit
-    return hit
+    def build() -> DataFrame:
+        return trailing_returns(orders_raw_series(spark, sf_dir), DS).cache()
+
+    return session_frame(spark, sf_dir, "trailing_df", build)
 
 
 @register("trailing_return", TRAILING_SQL)
@@ -1259,20 +1254,14 @@ JACCARD_SQL = f"""
 """
 
 
-_SHINGLE_CACHE: dict[tuple[int, str], DataFrame] = {}
-_HASHED_SHINGLE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached (doc_id, _sh) frame shared by jaccard + minhash."""
     from defimap_data_pipelines_spark.operators.dedup import doc_shingles
 
-    key = (id(spark), sf_dir)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is None:
-        hit = doc_shingles(read_table(spark, sf_dir, "documents")).cache()
-        _SHINGLE_CACHE[key] = hit
-    return hit
+    def build() -> DataFrame:
+        return doc_shingles(read_table(spark, sf_dir, "documents")).cache()
+
+    return session_frame(spark, sf_dir, "doc_shingles", build)
 
 
 def _hashed_doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1280,15 +1269,10 @@ def _hashed_doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation and verification."""
     from defimap_data_pipelines_spark.operators.dedup import hashed_shingles
 
-    key = (id(spark), sf_dir)
-    hit = _HASHED_SHINGLE_CACHE.get(key)
-    if hit is None:
-        hit = hashed_shingles(_doc_shingles(spark, sf_dir)).cache()
-        _HASHED_SHINGLE_CACHE[key] = hit
-    return hit
+    def build() -> DataFrame:
+        return hashed_shingles(_doc_shingles(spark, sf_dir)).cache()
 
-
-_NEARDUP_LABEL_CACHE: dict = {}
+    return session_frame(spark, sf_dir, "hashed_doc_shingles", build)
 
 
 def _neardup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1305,18 +1289,16 @@ def _neardup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    key = (id(spark), sf_dir)
-    hit = _NEARDUP_LABEL_CACHE.get(key)
-    if hit is None:
+    def build() -> DataFrame:
         pairs = ngram_jaccard_pairs(
             read_table(spark, sf_dir, "documents"),
             threshold=0.35,
             shingles=_doc_shingles(spark, sf_dir),
             hashed=_hashed_doc_shingles(spark, sf_dir),
         ).select("doc_a", "doc_b")
-        hit = connected_components(pairs, "doc_a", "doc_b").cache()
-        _NEARDUP_LABEL_CACHE[key] = hit
-    return hit
+        return connected_components(pairs, "doc_a", "doc_b").cache()
+
+    return session_frame(spark, sf_dir, "neardup_labels", build)
 
 
 @register("ngram_jaccard_pairs", JACCARD_SQL)
@@ -1361,49 +1343,30 @@ COSINE_TOPK_SQL = f"""
 """
 
 
-# (session id, sf_dir) -> cached exact / LSH top-5 frames for the 10
-# benchmark query vectors. cosine_topk, lsh_topk and ann_recall_eval
-# consume the IDENTICAL (query_id, vec_id, cosine) relations —
-# ann_recall_eval previously re-ran both the brute-force corpus pass
-# and the full LSH bucket join that the standalone queries had just
-# computed (the _SERIES_CACHE idiom; r13, guide §2.4/§5). Each frame
-# is 50 rows.
-_COSINE_TOPK10_CACHE: dict[tuple[int, str], DataFrame] = {}
-_LSH_TOPK10_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# Session-shared exact / LSH top-5 frames for the 10 benchmark query
+# vectors. cosine_topk, lsh_topk and ann_recall_eval consume the
+# IDENTICAL (query_id, vec_id, cosine) relations — ann_recall_eval
+# previously re-ran both the brute-force corpus pass and the full LSH
+# bucket join that the standalone queries had just computed (r13,
+# guide §2.4/§5). Each frame is 50 rows.
 def _cosine_topk10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
     from defimap_data_pipelines_spark.operators.similarity import cosine_topk
 
-    key = (id(spark), sf_dir)
-    hit = _COSINE_TOPK10_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
-    emb = read_table(spark, sf_dir, "embeddings")
-    hit = cosine_topk(emb.filter(F.col("vec_id") < 10), emb, k=5).cache()
-    _COSINE_TOPK10_CACHE[key] = hit
-    note_shared_frame("cosine_topk10", t0)
-    return hit
+    def build() -> DataFrame:
+        emb = read_table(spark, sf_dir, "embeddings")
+        return cosine_topk(emb.filter(F.col("vec_id") < 10), emb, k=5).cache()
+
+    return session_frame(spark, sf_dir, "cosine_topk10", build)
 
 
 def _lsh_topk10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
     from defimap_data_pipelines_spark.operators.similarity import lsh_topk
 
-    key = (id(spark), sf_dir)
-    hit = _LSH_TOPK10_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
-    emb = read_table(spark, sf_dir, "embeddings")
-    hit = lsh_topk(emb.filter(F.col("vec_id") < 10), emb, k=5).cache()
-    _LSH_TOPK10_CACHE[key] = hit
-    note_shared_frame("lsh_topk10", t0)
-    return hit
+    def build() -> DataFrame:
+        emb = read_table(spark, sf_dir, "embeddings")
+        return lsh_topk(emb.filter(F.col("vec_id") < 10), emb, k=5).cache()
+
+    return session_frame(spark, sf_dir, "lsh_topk10", build)
 
 
 @register("cosine_topk", COSINE_TOPK_SQL)
@@ -1556,9 +1519,6 @@ def q_allpairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- rows-only entries (not SQL-expressible: engine-native hashing) ----
 
 
-_MINHASH_PAIR_CACHE: dict = {}
-
-
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached FULL-CORPUS verified minhash pair frame at the curation
     threshold (0.35): minhash_lsh_dedup, clean_corpus, curation_report
@@ -1570,17 +1530,15 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_candidates,
     )
 
-    key = (id(spark), sf_dir)
-    hit = _MINHASH_PAIR_CACHE.get(key)
-    if hit is None:
-        hit = minhash_lsh_candidates(
+    def build() -> DataFrame:
+        return minhash_lsh_candidates(
             read_table(spark, sf_dir, "documents"),
             threshold=0.35,
             shingles=_doc_shingles(spark, sf_dir),
             hashed=_hashed_doc_shingles(spark, sf_dir),
         ).cache()
-        _MINHASH_PAIR_CACHE[key] = hit
-    return hit
+
+    return session_frame(spark, sf_dir, "minhash_pairs", build)
 
 
 @register("minhash_lsh_dedup", JACCARD_SQL)
@@ -2580,39 +2538,29 @@ def _clean_corpus_ctes() -> str:
     """
 
 
-# (session id, sf_dir) -> cached curation-survivor frame at the
-# standing curation params (min_quality=0.3, t=0.35, minhash pairing
-# over the session pair frame). clean_corpus and training_dataset run
-# the IDENTICAL curation; uncached, each invocation re-ran the
-# quality filter + exact-dedup window + survivor pair semi-joins AND
-# the eagerly-checkpointed connected-components contraction (~2 s of
+# Session-shared curation-survivor frame at the standing curation
+# params (min_quality=0.3, t=0.35, minhash pairing over the session
+# pair frame). clean_corpus and training_dataset run the IDENTICAL
+# curation; uncached, each invocation re-ran the quality filter +
+# exact-dedup window + survivor pair semi-joins AND the
+# eagerly-checkpointed connected-components contraction (~2 s of
 # driver-visible construction per call at sf0.1) — one cached
-# materialization now serves both consumers and repeat runs (the
-# _SERIES_CACHE idiom; r13, guide §2.4/§5). At 100 TB this frame is
-# the persisted silver table every curation pipeline materializes.
-_CLEAN_SURVIVORS_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# materialization now serves both consumers and repeat runs (r13,
+# guide §2.4/§5). At 100 TB this frame is the persisted silver table
+# every curation pipeline materializes.
 def _clean_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
     from defimap_data_pipelines_spark.operators.corpus import clean_corpus
 
-    key = (id(spark), sf_dir)
-    hit = _CLEAN_SURVIVORS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
-    hit = clean_corpus(
-        read_table(spark, sf_dir, "documents"),
-        min_quality=0.3,
-        jaccard_threshold=0.35,
-        use_minhash=True,
-        pairs_full=_minhash_pairs(spark, sf_dir),
-    ).cache()
-    _CLEAN_SURVIVORS_CACHE[key] = hit
-    note_shared_frame("clean_survivors", t0)
-    return hit
+    def build() -> DataFrame:
+        return clean_corpus(
+            read_table(spark, sf_dir, "documents"),
+            min_quality=0.3,
+            jaccard_threshold=0.35,
+            use_minhash=True,
+            pairs_full=_minhash_pairs(spark, sf_dir),
+        ).cache()
+
+    return session_frame(spark, sf_dir, "clean_survivors", build)
 
 
 @register("clean_corpus", _clean_corpus_sql())
@@ -3857,9 +3805,6 @@ KMEANS_SQL = f"""
 """
 
 
-_KMEANS_FIT_CACHE: dict = {}
-
-
 def _kmeans_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached 2-round k=8 Lloyd fit over the embeddings (vec_id, e,
     cluster, dist) — kmeans_clusters and semdedup_prune consume the
@@ -3867,19 +3812,13 @@ def _kmeans_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs once per session."""
     from defimap_data_pipelines_spark.operators.clustering import kmeans_fit
 
-    import time
-
-    key = (id(spark), sf_dir)
-    hit = _KMEANS_FIT_CACHE.get(key)
-    if hit is None:
-        t0 = time.perf_counter()
-        hit = kmeans_fit(
+    def build() -> DataFrame:
+        return kmeans_fit(
             read_table(spark, sf_dir, "embeddings"), k=8, iters=2,
             keep_vec=True,
         ).cache()
-        _KMEANS_FIT_CACHE[key] = hit
-        note_shared_frame("kmeans_assigned", t0)
-    return hit
+
+    return session_frame(spark, sf_dir, "kmeans_assigned", build)
 
 
 @register("kmeans_clusters", KMEANS_SQL)
@@ -3949,18 +3888,13 @@ IVF_TRAINED_SQL = f"""
 """
 
 
-# (session id, sf_dir) -> cached one-Lloyd-round IVF codebook (K=8
-# rows). ivf_topk_trained and ivf_topk_persisted train the IDENTICAL
-# codebook from the identical init, and each call previously re-ran
-# the init sort+limit collect plus the assign/update aggregation —
-# one cached fit now serves both consumers and both bench runs (the
-# _SERIES_CACHE idiom; r13, guide §2.4/§5).
-_IVF_CODEBOOK_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# Session-shared one-Lloyd-round IVF codebook (K=8 rows).
+# ivf_topk_trained and ivf_topk_persisted train the IDENTICAL codebook
+# from the identical init, and each call previously re-ran the init
+# sort+limit collect plus the assign/update aggregation — one cached
+# fit now serves both consumers and both bench runs (r13, guide
+# §2.4/§5).
 def _ivf_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
     from pyspark.sql import Window
 
     from defimap_data_pipelines_spark.operators.clustering import (
@@ -3968,29 +3902,24 @@ def _ivf_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_centroids,
     )
 
-    key = (id(spark), sf_dir)
-    hit = _IVF_CODEBOOK_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
-    emb = read_table(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    init = (
-        v.orderBy("vec_id")
-        .limit(8)
-        .select(
-            F.row_number()
-            .over(Window.orderBy("vec_id"))
-            .alias("cluster"),
-            F.col("e").alias("c"),
+    def build() -> DataFrame:
+        emb = read_table(spark, sf_dir, "embeddings")
+        v = emb.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("e")
         )
-    )
-    trained = update_centroids(assign_clusters(v, init)).cache()
-    _IVF_CODEBOOK_CACHE[key] = trained
-    note_shared_frame("ivf_trained_codebook", t0)
-    return trained
+        init = (
+            v.orderBy("vec_id")
+            .limit(8)
+            .select(
+                F.row_number()
+                .over(Window.orderBy("vec_id"))
+                .alias("cluster"),
+                F.col("e").alias("c"),
+            )
+        )
+        return update_centroids(assign_clusters(v, init)).cache()
+
+    return session_frame(spark, sf_dir, "ivf_trained_codebook", build)
 
 
 @register("ivf_topk_trained", IVF_TRAINED_SQL)
@@ -8388,47 +8317,39 @@ def _label_prop_sql(rounds: int = 2) -> str:
     )
 
 
-# (session id, sf_dir) -> cached symmetrized customer<->supplier
-# purchase edge frame. label_propagation, pagerank_top20 and
-# khop_reach consume the IDENTICAL frame, and each one's self-union
-# used to execute the orders x lineitem join + distinct twice — one
-# cached materialization now serves every consumer branch of every
-# consumer query (the _SERIES_CACHE idiom; r12 optimization).
-_PURCHASE_SYM_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# Session-shared symmetrized customer<->supplier purchase edge frame.
+# label_propagation, pagerank_top20 and khop_reach consume the
+# IDENTICAL frame, and each one's self-union used to execute the
+# orders x lineitem join + distinct twice — one cached
+# materialization now serves every consumer branch of every consumer
+# query (r12 optimization).
 def _purchase_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
-    key = (id(spark), sf_dir)
-    hit = _PURCHASE_SYM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    e = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey")).alias("u"),
-            F.concat(F.lit("s"), F.col("l_suppkey")).alias("v"),
+    def build() -> DataFrame:
+        o = read_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey"
         )
-        .distinct()
-    )
-    # localCheckpoint, not cache(): every consumer is an iterative
-    # graph operator that re-reads the frame many times and
-    # localCheckpoints its own derivations — deserialized checkpoint
-    # blocks are strictly cheaper to re-read than the columnar
-    # compressed cache (measured: pagerank 9.3 s via cache() vs the
-    # checkpointed form; see OPTIMIZATION_r12.md)
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
-    _PURCHASE_SYM_CACHE[key] = sym
-    note_shared_frame("purchase_sym_edges", t0)
-    return sym
+        l = read_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_suppkey"
+        )
+        e = (
+            o.join(l, o["o_orderkey"] == l["l_orderkey"])
+            .select(
+                F.concat(F.lit("c"), F.col("o_custkey")).alias("u"),
+                F.concat(F.lit("s"), F.col("l_suppkey")).alias("v"),
+            )
+            .distinct()
+        )
+        # localCheckpoint, not cache(): every consumer is an iterative
+        # graph operator that re-reads the frame many times and
+        # localCheckpoints its own derivations — deserialized
+        # checkpoint blocks are strictly cheaper to re-read than the
+        # columnar compressed cache (measured: pagerank 9.3 s via
+        # cache() vs the checkpointed form; see OPTIMIZATION_r12.md)
+        return e.unionByName(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ).localCheckpoint()
+
+    return session_frame(spark, sf_dir, "purchase_sym_edges", build)
 
 
 @register("label_propagation", _label_prop_sql())
@@ -9096,43 +9017,34 @@ _COPURCHASE_ED_SQL = """
 """
 
 
-_COPURCHASE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (u < v) part co-purchase edge frame.
 
-    Session-cached (the _SERIES_CACHE idiom): triangle_count and
-    kcore_rounds consume the identical frame, and kcore's self-union
-    reads it twice — uncached, the lineitem self-join + distinct
-    (the most expensive edge build in the registry) executed once per
-    consumer branch (r12 optimization)."""
-    import time
+    Session-shared: triangle_count and kcore_rounds consume the
+    identical frame, and kcore's self-union reads it twice — uncached,
+    the lineitem self-join + distinct (the most expensive edge build
+    in the registry) executed once per consumer branch (r12
+    optimization)."""
 
-    key = (id(spark), sf_dir)
-    hit = _COPURCHASE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u")
-    )
-    b = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v")
-    )
-    out = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-        .localCheckpoint()
-    )
-    _COPURCHASE_CACHE[key] = out
-    note_shared_frame("copurchase_edges", t0)
-    return out
+    def build() -> DataFrame:
+        li = read_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_partkey"
+        )
+        a = li.select(
+            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u")
+        )
+        b = li.select(
+            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v")
+        )
+        return (
+            a.join(b, "ok")
+            .filter(F.col("u") < F.col("v"))
+            .select("u", "v")
+            .distinct()
+            .localCheckpoint()
+        )
+
+    return session_frame(spark, sf_dir, "copurchase_edges", build)
 
 
 TRIANGLE_SQL = f"""
@@ -9833,45 +9745,35 @@ _REPEAT_COPURCHASE_ED_SQL = """
 """
 
 
-_REPEAT_COPURCHASE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def _repeat_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Support-thresholded co-purchase edges, session-cached (the
-    _SERIES_CACHE idiom): ra_linkpred, graph_walks,
-    community_modularity and local_clustering all consume the
-    identical frame, and several read it through self-unions /
-    multi-branch plans — one cached materialization of the lineitem
-    self-join + support groupBy serves every consumer
-    (r12 optimization)."""
-    import time
+    """Support-thresholded co-purchase edges, session-shared:
+    ra_linkpred, graph_walks, community_modularity and
+    local_clustering all consume the identical frame, and several read
+    it through self-unions / multi-branch plans — one cached
+    materialization of the lineitem self-join + support groupBy serves
+    every consumer (r12 optimization)."""
 
-    key = (id(spark), sf_dir)
-    hit = _REPEAT_COPURCHASE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u")
-    )
-    b = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v")
-    )
-    out = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("_s"))
-        .filter(F.col("_s") >= 2)
-        .select("u", "v")
-        .localCheckpoint()
-    )
-    _REPEAT_COPURCHASE_CACHE[key] = out
-    note_shared_frame("repeat_copurchase_edges", t0)
-    return out
+    def build() -> DataFrame:
+        li = read_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_partkey"
+        )
+        a = li.select(
+            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u")
+        )
+        b = li.select(
+            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v")
+        )
+        return (
+            a.join(b, "ok")
+            .filter(F.col("u") < F.col("v"))
+            .groupBy("u", "v")
+            .agg(F.count(F.lit(1)).alias("_s"))
+            .filter(F.col("_s") >= 2)
+            .select("u", "v")
+            .localCheckpoint()
+        )
+
+    return session_frame(spark, sf_dir, "repeat_copurchase_edges", build)
 
 
 RA_LINKPRED_SQL = f"""
@@ -16201,6 +16103,13 @@ def q_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q11_important_value (r12 backlog) + 13 returning r5 rows; the last
 # 3 r5 rows (kmv_distinct, lang_source_mixture, limit_offset) defer
 # to r14.
+#
+# session_frame window: the r13 window with the last 6 age-rotation
+# rows (epoch_shuffle .. interval_count_join, all fresh, none drifted)
+# returned to the age-rotation backlog, their slots going to the 6
+# queries the session_frame conversion of the shared-frame helpers
+# drifts that held no slot yet. The conversion's other 21 drifts
+# already hold slots.
 
 _DRIVER_WINDOW = [
     # reference parity (keep first — the flagship surface)
@@ -16251,10 +16160,12 @@ _DRIVER_WINDOW = [
     "triangle_count",
     "winsorized_stats",
     # r13 rotation, part 2 (age rotation): q11_important_value (the
-    # r12 wave-4 displacement, promised back this round) + the 13
+    # r12 wave-4 displacement, promised back this round) + the 7
     # alphabetically-first of the r5 block displaced by the r12
-    # optimization drifts. kmv_distinct, lang_source_mixture and
-    # limit_offset remain displaced to the r14 backlog (all three are
+    # optimization drifts. epoch_shuffle, event_transitions,
+    # gaps_islands, grouping_sets_id, html_text_extract,
+    # interval_count_join, kmv_distinct, lang_source_mixture and
+    # limit_offset wait in the age-rotation backlog (all nine are
     # fingerprint-certified unchanged since r5 — age, not risk).
     "q11_important_value",
     "benford_digit_check",
@@ -16264,12 +16175,14 @@ _DRIVER_WINDOW = [
     "date_arith",
     "dq_checks",
     "drawdown_series",
-    "epoch_shuffle",
-    "event_transitions",
-    "gaps_islands",
-    "grouping_sets_id",
-    "html_text_extract",
-    "interval_count_join",
+    # session_frame conversion drifts without an earlier slot: the
+    # shingle / minhash-pair / near-dup label helpers' consumers.
+    "curation_report",
+    "dedup_keep_best",
+    "lsh_dedup_recall",
+    "minhash_lsh_dedup",
+    "neardup_components",
+    "ngram_jaccard_pairs",
 ]
 
 

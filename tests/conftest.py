@@ -34,9 +34,11 @@ def sf_dir() -> str:
 # The slow tier still runs every round via
 #   python -m pytest tests/ -q -m "slow or not slow"
 # (a trailing -m overrides the addopts default) and its result is
-# recorded in OPTIMIZATION_r13.md. Node ids that disappear simply stop
-# matching — renaming a test silently promotes it back to the default
-# tier (fail-safe direction).
+# recorded in OPTIMIZATION_r13.md. Entries are full repo-relative node
+# ids, so a same-named test in another directory is never deselected by
+# accident. Node ids that disappear simply stop matching — renaming a
+# test silently promotes it back to the default tier (fail-safe
+# direction).
 # ---------------------------------------------------------------------------
 
 SLOW_TESTS = {
@@ -108,12 +110,7 @@ SLOW_TESTS = {
 }
 
 
-_SLOW_BASENAMES = {n.split("/")[-1] for n in SLOW_TESTS}
-
-
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        nid = item.nodeid.replace("\\", "/")
-        base = nid.split("/")[-1]  # "test_file.py::test_name[param]"
-        if base in _SLOW_BASENAMES:
+        if item.nodeid.replace("\\", "/") in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
