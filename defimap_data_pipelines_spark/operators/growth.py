@@ -168,25 +168,3 @@ def capital_gotk(raw: DataFrame) -> DataFrame:
         "end_day_investment",
         (F.col("end_day_investment") / sdi - 1).alias("percent_change"),
     )
-
-
-def benchmark_gotk(
-    strategy_name: str,
-    stable_raw: DataFrame | None = None,
-    volatile_price: DataFrame | None = None,
-    stablecoins: list[str] | None = None,
-) -> DataFrame:
-    """Benchmark selection (aave_transform.py:41-90): stablecoin
-    strategies benchmark against the aave_usdc capital GOTK; volatile
-    strategies against the wbtc price GOTK."""
-    from defimap_data_pipelines_spark.config import STABLECOINS
-
-    stablecoins = stablecoins or STABLECOINS
-    token = strategy_name.split("_")[1] if "_" in strategy_name else strategy_name
-    if token in stablecoins:
-        if stable_raw is None:
-            raise ValueError("stable benchmark requires the aave_usdc raw frame")
-        return capital_gotk(stable_raw)
-    if volatile_price is None:
-        raise ValueError("volatile benchmark requires the wbtc price frame")
-    return price_gotk(volatile_price)

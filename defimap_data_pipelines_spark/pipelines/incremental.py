@@ -25,59 +25,45 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.config import INITIAL_PRINCIPAL, QUANT_SCALE
+from defimap_data_pipelines_spark.operators.trailing import gotk_base, period_starts
+from defimap_data_pipelines_spark.pipelines.load import latest_by_date
+from defimap_data_pipelines_spark.pipelines.transform import return_1y_of
 
 
 def initial_gotk_state(raw_history: DataFrame) -> DataFrame:
-    """Bootstrap per-name state from history (one batch GOTK pass).
+    """Bootstrap per-name state from history: the last row of the batch
+    GOTK base (:func:`gotk_base`), with p0/li0 from the first row.
 
     Returns (name, p0, li0, cumq, prev_edi, last_date).
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("name").orderBy("date")
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    capital = (
-        F.lit(INITIAL_PRINCIPAL)
-        / F.first("asset_price").over(wcum)
-        * F.col("liquidity_index")
-        / F.first("liquidity_index").over(wcum)
-        * F.col("asset_price")
-    )
-    df = raw_history.select(
-        "date",
-        "name",
-        F.first("asset_price").over(wcum).alias("p0"),
-        F.first("liquidity_index").over(wcum).alias("li0"),
-        (F.col("aave_apy") / 365 / 100).alias("rate"),
-        capital.alias("cap"),
-        F.col("aave_price").alias("ap"),
-    )
-    q = F.round(F.col("cap") * F.col("rate") / F.col("ap") * float(QUANT_SCALE)).cast(
-        "long"
-    )
-    df = df.withColumn("cumq", F.sum(q).over(wcum))
     edi = F.col("cumq") / float(QUANT_SCALE) * F.col("ap") + F.col("cap")
-    df = df.withColumn("edi", edi)
-    last = Window.partitionBy("name").orderBy(F.col("date").desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(last))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "name",
-            "p0",
-            "li0",
-            "cumq",
-            F.col("edi").alias("prev_edi"),
-            F.col("date").alias("last_date"),
-        )
+    last = latest_by_date(
+        gotk_base(raw_history),
+        "cumq",
+        edi.alias("prev_edi"),
+        F.col("date").alias("last_date"),
     )
+    first = raw_history.groupBy("name").agg(
+        F.min_by("asset_price", "date").alias("p0"),
+        F.min_by("liquidity_index", "date").alias("li0"),
+    )
+    return first.join(last, "name")
 
 
-def _gotk_advance(joined: DataFrame) -> DataFrame:
-    """One-day GOTK advance over a state-joined day frame.
+def _carry_forward(
+    state: DataFrame, new_raw: DataFrame, updated: DataFrame
+) -> DataFrame:
+    """``updated`` plus the state rows of names with no row today (a gap
+    day must not reset a strategy's series)."""
+    untouched = state.join(new_raw.select("name"), "name", "left_anti")
+    return updated.unionByName(untouched)
 
-    Shared by the GOTK-rows and cum-series step functions. Emits every
-    intermediate (cap/ap/q/cumq) so callers project what they persist.
+
+def _advance(state: DataFrame, new_raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One-day GOTK advance: (state, day's raw rows) -> (step, state').
+
+    ``step`` carries every intermediate (cap/ap/q/cumq and the day's
+    start/end investment) so the public steps project what they persist.
     """
     p0 = F.coalesce(F.col("p0"), F.col("asset_price"))
     li0 = F.coalesce(F.col("li0"), F.col("liquidity_index"))
@@ -98,7 +84,7 @@ def _gotk_advance(joined: DataFrame) -> DataFrame:
     cumq = cumq_prev + q
     edi = cumq / float(QUANT_SCALE) * F.col("aave_price") + cap
 
-    return joined.select(
+    step = new_raw.join(F.broadcast(state), "name", "left").select(
         "date",
         "name",
         p0.alias("p0"),
@@ -110,6 +96,15 @@ def _gotk_advance(joined: DataFrame) -> DataFrame:
         prev_edi.alias("start_day_investment"),
         edi.alias("end_day_investment"),
     )
+    updated = step.select(
+        "name",
+        "p0",
+        "li0",
+        "cumq",
+        F.col("end_day_investment").alias("prev_edi"),
+        F.col("date").alias("last_date"),
+    )
+    return step, _carry_forward(state, new_raw, updated)
 
 
 def incremental_gotk_step(
@@ -121,7 +116,7 @@ def incremental_gotk_step(
     unseen in the state start a fresh series (p0/li0 from their first
     row, prev_edi = INITIAL_PRINCIPAL).
     """
-    step = _gotk_advance(new_raw.join(F.broadcast(state), "name", "left"))
+    step, state = _advance(state, new_raw)
     gotk_rows = step.select(
         "date",
         "name",
@@ -131,33 +126,15 @@ def incremental_gotk_step(
             "percent_change"
         ),
     )
-    updated = step.select(
-        "name",
-        "p0",
-        "li0",
-        "cumq",
-        F.col("end_day_investment").alias("prev_edi"),
-        F.col("date").alias("last_date"),
-    )
-    # names with no row today keep their state (a gap day must not
-    # reset a strategy's series)
-    untouched = state.join(new_raw.select("name"), "name", "left_anti")
-    return gotk_rows, updated.unionByName(untouched)
+    return gotk_rows, state
 
 
 def initial_tvl_state(raw_history: DataFrame) -> DataFrame:
     """(name, prev_tvl, last_date) from the latest history row."""
-    from pyspark.sql import Window
-
-    last = Window.partitionBy("name").orderBy(F.col("date").desc())
-    return (
-        raw_history.withColumn("_rn", F.row_number().over(last))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "name",
-            (F.col("atoken_supply") * F.col("asset_price")).alias("prev_tvl"),
-            F.col("date").alias("last_date"),
-        )
+    return latest_by_date(
+        raw_history,
+        (F.col("atoken_supply") * F.col("asset_price")).alias("prev_tvl"),
+        F.col("date").alias("last_date"),
     )
 
 
@@ -185,8 +162,7 @@ def incremental_tvl_step(
     new_state = joined.select(
         "name", tvl.alias("prev_tvl"), F.col("date").alias("last_date")
     )
-    untouched = state.join(new_raw.select("name"), "name", "left_anti")
-    return rows, new_state.unionByName(untouched)
+    return rows, _carry_forward(state, new_raw, new_state)
 
 
 # ---- incremental trailing returns --------------------------------------
@@ -211,8 +187,6 @@ def incremental_tvl_step(
 def initial_trailing_cum(raw_history: DataFrame) -> DataFrame:
     """Bootstrap the persisted base cum series (date,name,cap,ap,q,cumq)
     from history — one batch pass of the shared GOTK machinery."""
-    from defimap_data_pipelines_spark.operators.trailing import gotk_base
-
     return gotk_base(raw_history)
 
 
@@ -221,21 +195,11 @@ def incremental_cum_step(
 ) -> tuple[DataFrame, DataFrame]:
     """Advance the base cum series one day: -> (day's cum rows, state').
 
-    Same state schema as :func:`incremental_gotk_step` (prev_edi rides
-    along unused), so one state table can serve both consumers.
+    Same state and next state as :func:`incremental_gotk_step` (prev_edi
+    rides along unused), so one state table can serve both consumers.
     """
-    step = _gotk_advance(new_raw.join(F.broadcast(state), "name", "left"))
-    cum_rows = step.select("date", "name", "cap", "ap", "q", "cumq")
-    updated = step.select(
-        "name",
-        "p0",
-        "li0",
-        "cumq",
-        F.col("end_day_investment").alias("prev_edi"),
-        F.col("date").alias("last_date"),
-    )
-    untouched = state.join(new_raw.select("name"), "name", "left_anti")
-    return cum_rows, updated.unionByName(untouched)
+    step, state = _advance(state, new_raw)
+    return step.select("date", "name", "cap", "ap", "q", "cumq"), state
 
 
 def trailing_scalars_from_cum(cum: DataFrame, ds: str) -> DataFrame:
@@ -247,8 +211,6 @@ def trailing_scalars_from_cum(cum: DataFrame, ds: str) -> DataFrame:
     coverage rule (aave_transform.py:192-194) nulls a period whose
     window isn't fully covered — matching the batch path, where the
     all-NULL pc arm sums to a NULL compounded value."""
-    from defimap_data_pipelines_spark.operators.trailing import period_starts
-
     arms = []
     for period, start, rule in period_starts(ds):
         sliced = cum.filter(F.col("date").between(F.lit(start), F.lit(ds)))
@@ -288,14 +250,8 @@ def incremental_return_1y(cum: DataFrame, ds: str) -> DataFrame:
     scalar, incrementally. Agrees with the batch return_1y query to the
     reward-quantization grid (~1e-7 abs; the bases differ, see the
     section comment), not bit-for-bit."""
-    scal = trailing_scalars_from_cum(cum, ds).filter(
-        F.col("period").isin("1y", "ytd")
-    )
-    v1y = F.max(F.when(F.col("period") == "1y", F.col("value")))
-    vytd = F.max(F.when(F.col("period") == "ytd", F.col("value")))
-    return scal.groupBy("name").agg(
-        F.round(F.when(v1y == 0.0, vytd).otherwise(v1y), 9).alias("return_1y")
-    )
+    r1y = return_1y_of(trailing_scalars_from_cum(cum, ds))
+    return r1y.select("name", F.round("return_1y", 9).alias("return_1y"))
 
 
 def diff_snapshots(

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 Writer = Callable[[DataFrame, str], None]
@@ -26,11 +26,13 @@ def stamp_strategy_id(df: DataFrame, strategy_dim: DataFrame) -> DataFrame:
     return df.join(dim, df.name == dim.slug).drop("slug")
 
 
-def latest_by_date(df: DataFrame, value_col: str) -> DataFrame:
-    """O2: latest value per name (ORDER BY date DESC + take row 0,
-    aave_load.py:95-106) as a max_by aggregate."""
-    return df.groupBy("name").agg(
-        F.max_by(F.col(value_col), F.col("date")).alias(value_col)
+def latest_by_date(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """O2: (name, *cols) from each name's latest row (ORDER BY date DESC
+    + take row 0, aave_load.py:95-106) as one max_by aggregate."""
+    return (
+        df.groupBy("name")
+        .agg(F.max_by(F.struct(*cols), F.col("date")).alias("_latest"))
+        .select("name", "_latest.*")
     )
 
 
@@ -71,9 +73,7 @@ def load_apr(raw: DataFrame, strategy_dim: DataFrame, write: Writer) -> None:
         F.col("total_apy").alias("value"),
     )
     write(stamp_strategy_id(out, strategy_dim), "strategy_apr")
-    latest = raw.groupBy("name").agg(
-        F.max_by(F.col("total_apy"), F.col("date")).alias("apr")
-    )
+    latest = latest_by_date(raw, F.col("total_apy").alias("apr"))
     write(latest, "strategy__apr_update")
 
 

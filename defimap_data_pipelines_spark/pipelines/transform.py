@@ -27,16 +27,22 @@ from defimap_data_pipelines_spark.operators.trailing import (
 from defimap_data_pipelines_spark.operators.tvl import tvl
 
 
-def return_1y_with_fallback(trailing: DataFrame, ds: str) -> DataFrame:
-    """A7+A8: compounded 1y return at ds, ytd fallback when 0.0."""
-    c = compounded_return(trailing).filter(
-        (F.col("date") == F.lit(ds).cast("date"))
-        & F.col("period").isin("1y", "ytd")
-    )
+def return_1y_of(values: DataFrame) -> DataFrame:
+    """A8: (name, return_1y) from per-period (period, name, value) rows:
+    the 1y value, or the ytd value when the 1y one is 0.0."""
     v1y = F.max(F.when(F.col("period") == "1y", F.col("value")))
     vytd = F.max(F.when(F.col("period") == "ytd", F.col("value")))
-    return c.groupBy("name").agg(
-        F.when(v1y == 0.0, vytd).otherwise(v1y).alias("return_1y")
+    return (
+        values.filter(F.col("period").isin("1y", "ytd"))
+        .groupBy("name")
+        .agg(F.when(v1y == 0.0, vytd).otherwise(v1y).alias("return_1y"))
+    )
+
+
+def return_1y_with_fallback(trailing: DataFrame, ds: str) -> DataFrame:
+    """A7+A8: compounded 1y return at ds, ytd fallback when 0.0."""
+    return return_1y_of(
+        compounded_return(trailing).filter(F.col("date") == F.lit(ds).cast("date"))
     )
 
 

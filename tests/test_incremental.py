@@ -198,6 +198,104 @@ def test_incremental_return_1y_equals_query(spark, sf_dir):
             assert inc[k] == pytest.approx(v, rel=1e-6, abs=1e-7), k
 
 
+def _tiny_raw(spark):
+    """3 names x 6 days; name "c" has no row on day 3 (a gap day). Built
+    from pandas, so Spark plans it as a local relation (fast to run)."""
+    import datetime as dt
+
+    import pandas as pd
+
+    rows = []
+    for k, name in enumerate(["a", "b", "c"]):
+        for d in range(6):
+            if name == "c" and d == 2:
+                continue
+            rows.append((
+                dt.date(2023, 3, 1) + dt.timedelta(days=d),
+                name,
+                1.0 + 0.013 * k + 0.007 * d * (k + 1),  # asset_price
+                1.0 + 0.0001 * d * (k + 2),  # liquidity_index
+                3.7 + k,  # aave_apy
+                80.5 + 0.3 * d - k,  # aave_price
+                1000.0 + 17.0 * d + 5.0 * k,  # atoken_supply
+            ))
+    cols = ["date", "name", "asset_price", "liquidity_index", "aave_apy",
+            "aave_price", "atoken_supply"]
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=cols),
+        "date date, name string, asset_price double, liquidity_index double,"
+        " aave_apy double, aave_price double, atoken_supply double",
+    )
+
+
+def _local(df):
+    """Materialize ``df`` as a local relation (cuts the lineage a daily
+    job would cut by persisting its state)."""
+    return df.sparkSession.createDataFrame(df.toPandas(), df.schema)
+
+
+def _by_name(df):
+    return {r.name: r for r in df.collect()}
+
+
+def test_gap_day_keeps_state(spark):
+    """A name with no row today leaves the GOTK, TVL and cum steps with
+    its state unchanged."""
+    from defimap_data_pipelines_spark.pipelines.incremental import (
+        incremental_cum_step,
+        incremental_tvl_step,
+        initial_tvl_state,
+    )
+
+    raw = _tiny_raw(spark)
+    history = raw.filter(F.col("date") < "2023-03-03")
+    day = raw.filter(F.col("date") == "2023-03-03")
+    gotk_state = _local(initial_gotk_state(history))
+    tvl_state = _local(initial_tvl_state(history))
+    for state, step in (
+        (gotk_state, incremental_gotk_step),
+        (gotk_state, incremental_cum_step),
+        (tvl_state, incremental_tvl_step),
+    ):
+        before = _by_name(state)
+        assert set(before) == {"a", "b", "c"}
+        after = _by_name(step(state, day)[1])
+        assert set(after) == {"a", "b", "c"}, step.__name__
+        assert after["c"] == before["c"], step.__name__
+        assert after["a"].last_date > before["a"].last_date, step.__name__
+
+
+def test_gotk_and_cum_steps_share_next_state(spark):
+    """Both steps advance the same state table; for one (state, day)
+    they must emit the identical next state (including a name the state
+    has never seen)."""
+    from defimap_data_pipelines_spark.pipelines.incremental import (
+        incremental_cum_step,
+    )
+
+    raw = _tiny_raw(spark)
+    state = _local(initial_gotk_state(
+        raw.filter((F.col("date") < "2023-03-05") & (F.col("name") != "b"))
+    ))
+    day = raw.filter(F.col("date") == "2023-03-05")
+    via_gotk = sorted(incremental_gotk_step(state, day)[1].collect())
+    assert [r.name for r in via_gotk] == ["a", "b", "c"]
+    assert via_gotk == sorted(incremental_cum_step(state, day)[1].collect())
+
+
+def test_initial_state_equals_stepping_from_empty(spark):
+    """The bootstrap is exactly the state reached by advancing an empty
+    state one day at a time over the same history (gap day included)."""
+    raw = _tiny_raw(spark)
+    expected = initial_gotk_state(raw)
+    state = spark.createDataFrame([], expected.schema)
+    for d in sorted({r.date for r in raw.select("date").collect()}):
+        state = _local(
+            incremental_gotk_step(state, raw.filter(F.col("date") == d))[1]
+        )
+    assert sorted(state.collect()) == sorted(expected.collect())
+
+
 def test_incremental_dedup_equals_batch(spark):
     """Replaying the corpus in any batch split must reproduce the
     batch-mode exact-dedup canonicals (ids arrive in order, so the
